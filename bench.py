@@ -1,30 +1,24 @@
 """Benchmark harness. Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>, "rollup": {...}}
+   "queries": {name: sec, ...}, "sf": <sf>, "rollup": {...}, "features": {...}}
 
 Phases:
 1. Token-table tier-cascade rollup (the engine's headline): read the cached
    deterministic token table (generated once under .data/), run the
    raw->1m->1h->1d single-scan cascade, write parquet snapshots.
    Headline number = tokens/sec ingested end-to-end.
-2. Representative SQL/operator queries over $SPARK_GRAFT_SF_DIR.
+2. feats_default_set: the default tsfeatures kernel set over M4-scale series.
+3. Representative SQL/operator queries over $SPARK_GRAFT_SF_DIR.
+
+Each leaf is the min over a fixed number of timed passes that follow
+warm-up passes. For the per-layer split and Spark's task CPU, GC, shuffle
+and spill, run the repo benchmark instead (perfbench/README.md):
+  python perfbench/run.py --workload cascade --seed 1 --seconds 1 --trace 1
 
 Env:
   SPARK_GRAFT_SF_DIR   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     (default 32)
+  SPARK_GRAFT_CPUS     (default: the CPUs this process may run on)
   SPARK_GRAFT_BENCH_DOCS (default 15000 -> ~60M tokens)
-
-Scaling-efficiency evidence (north rule: >=0.8 from N to 4N): run this
-twice, SPARK_GRAFT_CPUS=8 then 32, same input — see tools/run_scaling.py
-which writes BENCH/BASELINE.md.
-
-Probe gating (round 5): every headline trial is preceded by a pinned
-host-capacity probe; noisy trials (probe < 0.90 * session pmax) are
-recorded-but-flagged and the headline is the min over QUIET trials, so a
-hypervisor steal wave can no longer write the round's official number
-(it wrote r04's: 11.3s recorded vs 5.7s probe-gated, same kernel).
-Disable with SPARK_GRAFT_PROBE_GATE=0; auto-disabled for scaling-trial
-legs (SPARK_GRAFT_TRIAL_CHILD) whose harness gates externally.
 """
 
 from __future__ import annotations
@@ -39,132 +33,13 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "15000"))
 DATA_DIR = os.path.join(REPO, ".data")
 
-# background-loop coordination (see tools/quiet_capture.py docstring)
-TRIAL_FLAG = "/tmp/graft_trial_running"
-DEV_FLAG = "/tmp/graft_dev_busy"
-TRIAL_WAIT_SEC = 120.0
-TRIAL_POLL_SEC = 10.0
-DEV_WAIT_SEC = 900.0   # max wait for a FOREIGN dev-flag holder to finish
-
-# -- steal-wave probe gating (round-5) -------------------------------------
-# This shared host shows hour-scale hypervisor steal waves (3-7x wall-time
-# swings on identical runs; BENCH/BASELINE.md "host noise"). Round 4's
-# official artifact recorded the rollup headline at 11.3s while a
-# probe-gated capture of the SAME kernel+config read 5.7s — the engine was
-# fine, the evidence pipeline let a noisy hour write the round's number.
-# Fix (VERDICT r04 #1): measure host capacity with a cheap pinned busy-loop
-# probe before every headline trial; a trial whose probe is below
-# QUIET_FRAC * pmax (session-best capacity, seeded from the scaling
-# harness's accumulated pmax) is recorded but marked noisy, and the loop
-# keeps drawing (bounded attempts + bounded sleep budget) until a quiet
-# trial corroborates the min. The headline is min over QUIET trials when
-# any exist; every trial carries its probe in rollup.trials_detail.
-PROBE_CORES = int(os.environ.get("SPARK_GRAFT_PROBE_CORES", "16"))
-PROBE_HISTORY_PATH = os.path.join(REPO, "BENCH", "probe_history.jsonl")
-PROBE_DUR = 1.2
-QUIET_FRAC = float(os.environ.get("SPARK_GRAFT_QUIET_FRAC", "0.90"))
-GATE_WAIT_BUDGET = float(os.environ.get("SPARK_GRAFT_GATE_BUDGET", "420"))
-GATE_POLL_SEC = 20.0
-
-
-def _spin(dur: float, q) -> None:
-    # identical body to tools/run_scaling._spin — probes MUST share units
-    # so pmax accumulated by the scaling harness seeds this gate correctly
-    end = time.perf_counter() + dur
-    it = 0
-    x = 1.0
-    while time.perf_counter() < end:
-        for _ in range(10000):
-            x = x * 1.0000001 + 1e-9
-        it += 1
-    q.put(it)
-
-
-def _capacity_probe(cores: int = PROBE_CORES, dur: float = PROBE_DUR) -> float:
-    """Aggregate busy-loop iterations/sec across ``cores`` forked workers —
-    a direct read of how much CPU the shared host is giving us right now
-    (same protocol as tools/run_scaling.capacity_probe; inlined so bench.py
-    stays standalone for the driver)."""
-    import multiprocessing as mp
-
-    ctx = mp.get_context("fork")
-    q = ctx.Queue()
-    procs = [ctx.Process(target=_spin, args=(dur, q)) for _ in range(cores)]
-    for p in procs:
-        p.start()
-    total = sum(q.get() for _ in procs)
-    for p in procs:
-        p.join()
-    return total / dur
-
-
-class _ProbeGate:
-    """Session-best-relative quiet gate for headline trials.
-
-    pmax is seeded from BENCH/scaling_trials_cluster2.json (the scaling
-    harness accumulates the session-best host-capacity probe there — the
-    probe measures the HOST, so any session's best is a valid ceiling) and
-    raised by every probe observed during this bench run. Disabled when
-    this process is itself a scaling-trial leg (SPARK_GRAFT_TRIAL_CHILD):
-    the trial harness does its own gating and the legs must stay
-    protocol-identical across rounds."""
-
-    def __init__(self) -> None:
-        self.enabled = (
-            os.environ.get("SPARK_GRAFT_PROBE_GATE", "1") != "0"
-            and not os.environ.get("SPARK_GRAFT_TRIAL_CHILD")
-        )
-        self.pmax = 0.0
-        if self.enabled:
-            try:
-                with open(os.path.join(REPO, "BENCH", "scaling_trials_cluster2.json")) as f:
-                    self.pmax = float(json.load(f).get("pmax", 0.0))
-            except Exception:
-                pass
-        self.wait_budget = GATE_WAIT_BUDGET
-
-    @property
-    def bar(self) -> float:
-        return QUIET_FRAC * self.pmax
-
-    def probe(self) -> float:
-        p = _capacity_probe()
-        self.pmax = max(self.pmax, p)
-        # every probe is a host observation: append it to the shared
-        # history so the scaling harness's era-relative quiet bar sees the
-        # same ceiling evidence the bench saw (same shape: PROBE_CORES)
-        try:
-            with open(PROBE_HISTORY_PATH, "a") as f:
-                f.write(json.dumps({"t": time.time(), "cores": PROBE_CORES,
-                                    "probe": p, "tag": "bench-gate"}) + "\n")
-        except OSError:
-            pass
-        return p
-
-    def is_quiet(self, probe: float | None) -> bool:
-        return probe is None or self.pmax <= 0 or probe >= QUIET_FRAC * self.pmax
-
-    def wait_quiet(self, max_wait: float = 120.0) -> float | None:
-        """Probe; while noisy and budget remains, sleep+reprobe. Returns the
-        last probe (which may still be below the bar if budgets ran out)."""
-        if not self.enabled:
-            return None
-        p = self.probe()
-        waited = 0.0
-        while (
-            not self.is_quiet(p)
-            and waited < max_wait
-            and self.wait_budget > 0
-        ):
-            time.sleep(GATE_POLL_SEC)
-            waited += GATE_POLL_SEC
-            self.wait_budget -= GATE_POLL_SEC
-            p = self.probe()
-        return p
+ROLLUP_TRIALS = 5
+QUERY_TRIALS = 3
+FEAT_SERIES = 500
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -196,77 +71,30 @@ def ensure_token_table(spark, path: str) -> None:
     write_token_table(spark, path, n_docs=N_DOCS, base_seed=42, buckets=max(CPUS * 2, 16))
 
 
-def _trial_budget(trials: int, max_trials: int,
-                  is_trial_child: bool) -> tuple[int, int]:
-    """(base draws, cap) for the timed-trial loop. A scaling-trial LEG
-    runs a FIXED recipe: exactly `trials` timed passes, no adaptive
-    extension. The convergence loop is a headline-bench feature — for
-    legs it (a) stretched a leg from ~1 min to ~8 under noise, pushing
-    the pair's second leg far outside the quiet window that fired it, and
-    (b) made per-leg tree-CPU accounting (work-conservation evidence)
-    incomparable across arms, since each arm drew a different number of
-    passes. The scaling harness handles noise its own way (probe gating +
-    min-wall accumulation across many pairs)."""
-    base = max(trials, 1)
-    return (base, base) if is_trial_child else (base, max_trials)
-
-
-def _hold_dev_flag() -> str | None:
-    """Claim /tmp/graft_dev_busy for the duration of this bench run so the
-    opportunistic background loops (tools/quiet_capture.py trial pairs,
-    tools/probe_sampler.py probes) pause instead of competing for cores —
-    the per-round driver bench must measure the engine, not a collision.
-
-    Skipped when SPARK_GRAFT_TRIAL_CHILD is set: then THIS process is a leg
-    of a scaling trial and claiming the flag would make the harness's
-    inter-leg DEV_FLAG checks abort their own subprocess. Also skipped when
-    SPARK_GRAFT_DEV_PARENT is set: the flag already belongs to this
-    process's parent (tools/devrun.sh, tools/quiet_driver_bench.py), so
-    waiting on it would deadlock against ourselves.
-
-    A FOREIGN dev flag (neither parent's nor ours — e.g. the driver's
-    per-round bench launching while a quiet-capture bench is mid-run) is
-    waited out (bounded): two concurrent full benches would halve each
-    other's cores and the official artifact must never record that
-    collision. If another trial's flag is up, wait (bounded) for its leg
-    to finish, then claim anyway: quiet_capture aborts an in-flight pair
-    unsaved at its next checkpoint once the dev flag appears, so the
-    overlap is one leg at worst and the aborted pair is never recorded as
-    evidence."""
-    if os.environ.get("SPARK_GRAFT_TRIAL_CHILD"):
-        return None
-    if os.path.exists(DEV_FLAG):
-        if os.environ.get("SPARK_GRAFT_DEV_PARENT"):
-            return None
-        waited = 0.0
-        while os.path.exists(DEV_FLAG) and waited < DEV_WAIT_SEC:
-            time.sleep(TRIAL_POLL_SEC)
-            waited += TRIAL_POLL_SEC
-        if os.path.exists(DEV_FLAG):
-            return None  # holder looks stuck; proceed without the flag
-    waited = 0.0
-    while os.path.exists(TRIAL_FLAG) and waited < TRIAL_WAIT_SEC:
-        time.sleep(TRIAL_POLL_SEC)
-        waited += TRIAL_POLL_SEC
-    try:
-        open(DEV_FLAG, "w").close()
-    except OSError:
-        return None
-    return DEV_FLAG
+def _timed(trials: int, run) -> list[float]:
+    """Sorted wall seconds of ``trials`` calls of ``run``."""
+    secs = []
+    for _ in range(trials):
+        t0 = time.time()
+        run()
+        secs.append(round(time.time() - t0, 3))
+    return sorted(secs)
 
 
 def main() -> None:
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entrymod
+    from tsfeatures_spark.operators.features import features_wide
     from tsfeatures_spark.operators.rollup import rollup_tiers
     from tsfeatures_spark.session import get_spark
+    from tsfeatures_spark.sources.generator import token_table
 
     spark = get_spark("bench", cpus=CPUS, shuffle_partitions=max(CPUS, 8))
     spark.sparkContext.setLogLevel("ERROR")
     # ship the package zip (spark-submit --py-files mechanism): required
-    # when SPARK_GRAFT_MASTER=local-cluster[...] runs real separate
-    # executor JVMs whose Python workers don't inherit the driver sys.path
+    # when SPARK_GRAFT_MASTER names a cluster whose Python workers don't
+    # inherit the driver's sys.path
     entrymod._ensure_pkg_on_executors(spark)
 
     tok_path = os.path.join(DATA_DIR, f"tokens_bench_{N_DOCS}")
@@ -289,7 +117,6 @@ def main() -> None:
     total_tokens = toks.agg(F.sum("n_tok")).collect()[0][0]
 
     out_path = os.path.join(DATA_DIR, "rollup_out")
-    shutil.rmtree(out_path, ignore_errors=True)
 
     # warm the scan + JIT with a cheap pass so the measured number is the
     # steady-state pipeline, not first-query JVM warmup
@@ -300,143 +127,42 @@ def main() -> None:
     # (high-core) runs the most (a pure scan pass never starts them)
     # (repartition to CPUS so one worker forks per core, not just one)
     rollup_tiers(toks.limit(CPUS * 2).repartition(CPUS)).count()
-    # best-of-N trials: the sandbox VM has heavy steal-time noise (identical
-    # consecutive runs vary 3x); min wall time = the pipeline's capability.
-    # Default 5 for the headline rollup number (round 4; was 3): steal
-    # waves run longer than 3 consecutive trials, so min-of-3 still read
-    # whole rounds at 2-3x capability — two extra draws cost ~30s and
-    # roughly double the odds one lands in a calm microwindow. The JSON
-    # records the full spread either way.
-    trials = int(os.environ.get("SPARK_GRAFT_TRIALS", "5"))
-    # steal-wave adaptivity: keep drawing (bounded) until the fastest two
-    # trials agree within 10% — in a quiet window the base draws already
-    # do (spreads ~1.1x) and nothing extra runs; under hypervisor steal
-    # (3-7x swings) extra draws stop the reported min from reading the
-    # wave instead of the pipeline. Full spread always lands in sec_all.
-    trials, max_trials = _trial_budget(
-        trials, int(os.environ.get("SPARK_GRAFT_MAX_TRIALS", "9")),
-        bool(os.environ.get("SPARK_GRAFT_TRIAL_CHILD")))
-    # sink=none measures the scan+cascade compute phase only (used by the
-    # scaling harness: on one box the single local disk is a fixed resource
-    # that a real 4N-executor cluster would scale out; CPU is what the
-    # N-vs-4N proxy can honestly vary). Default includes the parquet sink.
-    sink = os.environ.get("SPARK_GRAFT_SINK", "parquet")
-    gate = _ProbeGate()
-    trials_detail: list[dict] = []
 
-    # skew-split evidence knob (default = the shipped unsplit path; the
-    # generator's lognormal tail at bench scale has no 10^7-token doc, so
-    # the split is exercised via tools/bench_split_giant.py's planted doc)
-    split_giant = int(os.environ.get("SPARK_GRAFT_SPLIT_GIANT", "0")) or None
-
-    def _one_trial() -> None:
-        probe = gate.wait_quiet(max_wait=60.0)
+    # min of N: the pipeline's capability; the full spread lands in sec_all
+    trial_secs = []
+    for _ in range(ROLLUP_TRIALS):
         shutil.rmtree(out_path, ignore_errors=True)
         t0 = time.time()
-        r = rollup_tiers(toks, split_giant_tok=split_giant)
-        if sink == "none":
-            r.count()
-        else:
-            (
-                r.write.mode("overwrite")
-                .option("compression", os.environ.get("SPARK_GRAFT_BENCH_CODEC", "zstd"))
-                .partitionBy("tier")
-                .parquet(out_path)
-            )
-        sec = time.time() - t0
-        trials_detail.append(
-            {"sec": round(sec, 3),
-             "probe": None if probe is None else int(probe),
-             "quiet": gate.is_quiet(probe)}
+        (
+            rollup_tiers(toks).write.mode("overwrite")
+            .option("compression", "zstd")
+            .partitionBy("tier")
+            .parquet(out_path)
         )
-
-    def _quiet_secs() -> list[float]:
-        return sorted(t["sec"] for t in trials_detail if t["quiet"])
-
-    for _ in range(max(trials, 1)):
-        _one_trial()
-    # converged when the two fastest QUIET trials agree within 10% (an
-    # independent corroborating draw); if no quiet trial exists yet, keep
-    # drawing — the per-trial wait_quiet and the gate's sleep budget bound
-    # total added wall time even on an all-noisy host.
-    while len(trials_detail) < max_trials:
-        q2 = _quiet_secs()[:2]
-        if len(q2) >= 2 and q2[1] / q2[0] <= 1.10:
-            break
-        _one_trial()
-    # headline = min over quiet trials when any exist (the pipeline's
-    # capability, not the hypervisor's); annotated fallback otherwise
-    trial_secs = sorted(t["sec"] for t in trials_detail)
-    quiet_secs = _quiet_secs()
-    rollup_sec = quiet_secs[0] if quiet_secs else trial_secs[0]
+        trial_secs.append(round(time.time() - t0, 3))
+    trial_secs.sort()
+    rollup_sec = trial_secs[0]
     rollup_median = trial_secs[len(trial_secs) // 2]
-    tokens_per_sec = total_tokens / rollup_sec
+
+    timings: dict[str, float] = {"rollup_cascade": rollup_sec}
+    # reference-API throughput: the full default 17-kernel tsfeatures
+    # set (incl. Holt/HW/GARCH/STL fits) over M4-scale series — the
+    # single-node comparison point vs the reference's
+    # multiprocessing+statsmodels pipeline (SURVEY.md §7.0)
+    fd = token_table(spark, FEAT_SERIES, base_seed=7, mean_len=300, max_len=1000).cache()
+    fd.count()
+    feat_secs = _timed(QUERY_TRIALS, lambda: features_wide(fd, scale=True, freq=24).count())
+    timings["feats_default_set"] = feat_secs[0]
+    feats_stats = {"n_series": FEAT_SERIES,
+                   "series_per_sec": round(FEAT_SERIES / feat_secs[0], 1),
+                   "sec_all": feat_secs}
+    fd.unpersist()
 
     qs = entrymod.queries()
-    timings: dict[str, float] = {}
-    timings["rollup_cascade"] = round(rollup_sec, 3)
-    feats_stats: dict = {}
-    if os.environ.get("SPARK_GRAFT_ROLLUP_ONLY"):
-        qs = {}
-    if qs:
-        # reference-API throughput: the full default 17-kernel tsfeatures
-        # set (incl. Holt/HW/GARCH/STL fits) over M4-scale series — the
-        # single-node comparison point vs the reference's
-        # multiprocessing+statsmodels pipeline (which cannot run here:
-        # its deps aren't installed — SURVEY.md §7.0)
-        from tsfeatures_spark.operators.features import features_wide
-        from tsfeatures_spark.sources.generator import token_table
-
-        n_series = int(os.environ.get("SPARK_GRAFT_FEAT_SERIES", "500"))
-        fd = token_table(spark, n_series, base_seed=7, mean_len=300, max_len=1000).cache()
-        fd.count()
-        # the second headline (reference-API throughput) gets the same
-        # quiet-pick treatment as the rollup: per-trial probe, draw extra
-        # trials (bounded) until one lands in a quiet window, report the
-        # quiet min. Re-arm a small sleep budget in case the rollup phase
-        # consumed the global one during a noise stretch.
-        gate.wait_budget = max(gate.wait_budget, 120.0)
-        feat_detail: list[dict] = []
-        base_ft = max(int(os.environ.get("SPARK_GRAFT_QUERY_TRIALS", "3")), 1)
-        max_ft = int(os.environ.get("SPARK_GRAFT_FEAT_MAX_TRIALS", "6"))
-        while len(feat_detail) < max(base_ft, 1):
-            p = gate.wait_quiet(max_wait=45.0)
-            t0 = time.time()
-            features_wide(fd, scale=True, freq=24).count()
-            feat_detail.append({"sec": round(time.time() - t0, 3),
-                                "probe": None if p is None else int(p),
-                                "quiet": gate.is_quiet(p)})
-        while (not any(t["quiet"] for t in feat_detail)
-               and len(feat_detail) < max_ft and gate.enabled):
-            p = gate.wait_quiet(max_wait=45.0)
-            t0 = time.time()
-            features_wide(fd, scale=True, freq=24).count()
-            feat_detail.append({"sec": round(time.time() - t0, 3),
-                                "probe": None if p is None else int(p),
-                                "quiet": gate.is_quiet(p)})
-        feat_secs = sorted(t["sec"] for t in feat_detail)
-        quiet_ft = sorted(t["sec"] for t in feat_detail if t["quiet"])
-        feats_sec = quiet_ft[0] if quiet_ft else feat_secs[0]
-        timings["feats_default_set"] = feats_sec
-        feats_stats = {"n_series": n_series, "series_per_sec": round(n_series / feats_sec, 1),
-                       "sec_all": feat_secs, "trials_detail": feat_detail,
-                       "quiet_trials": len(quiet_ft)}
-        fd.unpersist()
-    # min-of-N per query: this host's steal noise produced phantom
-    # single-trial "regressions" in r01->r02 comparisons (all small queries
-    # drifting together); min over >=3 draws reads the pipeline, not the VM
-    q_trials = int(os.environ.get("SPARK_GRAFT_QUERY_TRIALS", "3"))
-    if BENCH_QUERIES and qs:
-        gate.wait_quiet(max_wait=90.0)
     query_spread: dict[str, list[float]] = {}
-    for name in BENCH_QUERIES if qs else []:
-        secs = []
-        for _ in range(max(q_trials, 1)):
-            t0 = time.time()
-            # count() forces full execution without driver-side materialization
-            qs[name](spark, SF_DIR).count()
-            secs.append(round(time.time() - t0, 3))
-        secs.sort()
+    for name in BENCH_QUERIES:
+        # count() forces full execution without driver-side materialization
+        secs = _timed(QUERY_TRIALS, lambda: qs[name](spark, SF_DIR).count())
         timings[name] = secs[0]
         query_spread[name] = secs
 
@@ -453,25 +179,15 @@ def main() -> None:
                 "rollup": {
                     "n_docs": N_DOCS,
                     "tokens": int(total_tokens),
-                    "sec": round(rollup_sec, 3),
-                    "tokens_per_sec": int(tokens_per_sec),
+                    "sec": rollup_sec,
+                    "tokens_per_sec": int(total_tokens / rollup_sec),
                     "trials": len(trial_secs),
-                    "sec_median": round(rollup_median, 3),
-                    "sec_all": [round(s, 3) for s in trial_secs],
+                    "sec_median": rollup_median,
+                    "sec_all": trial_secs,
                     "tokens_per_sec_median": int(total_tokens / rollup_median),
-                    # per-trial host-capacity annotation (VERDICT r04 #1):
-                    # quiet = probe >= QUIET_FRAC * pmax at trial start
-                    "trials_detail": trials_detail,
-                    "quiet_trials": len(quiet_secs),
-                    "probe_gate": {
-                        "enabled": gate.enabled,
-                        "pmax": int(gate.pmax),
-                        "quiet_frac": QUIET_FRAC,
-                        "bar": int(gate.bar),
-                    },
                 },
                 "features": feats_stats,
-                "query_trials": q_trials,
+                "query_trials": QUERY_TRIALS,
                 "queries_all": query_spread,
             }
         )
@@ -480,12 +196,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    _held = _hold_dev_flag()
-    try:
-        main()
-    finally:
-        if _held is not None:
-            try:
-                os.remove(_held)
-            except OSError:
-                pass
+    main()

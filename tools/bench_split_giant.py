@@ -19,7 +19,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tools"))
 
 GIANT_TOK = 10_000_000
 DAY = 86400
@@ -34,7 +33,6 @@ def main() -> None:
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from run_scaling import capacity_probe
     from tsfeatures_spark.operators.rollup import rollup_tiers
     from tsfeatures_spark.session import get_spark
     from tsfeatures_spark.sources.generator import token_table
@@ -59,15 +57,13 @@ def main() -> None:
     out: dict = {"n_docs": n_docs + 1, "cpus": cpus, "giant_tok": GIANT_TOK,
                  "total_tok": int(total_tok), "arms": {}}
     for label, split in (("unsplit", None), ("split-4day", 4 * DAY)):
-        secs, probes = [], []
+        secs = []
         for _ in range(trials):
-            probes.append(capacity_probe(min(cpus, 16)))
             t0 = time.time()
             rollup_tiers(df, split_giant_tok=split).count()
             secs.append(round(time.time() - t0, 3))
         secs.sort()
-        out["arms"][label] = {"sec_all": secs, "min": secs[0],
-                              "probes": [int(p) for p in probes]}
+        out["arms"][label] = {"sec_all": secs, "min": secs[0]}
         print(f"{label:10s} min {secs[0]}s all {secs}", flush=True)
     out["speedup_min"] = round(out["arms"]["unsplit"]["min"]
                                / out["arms"]["split-4day"]["min"], 3)

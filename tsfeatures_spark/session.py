@@ -22,14 +22,10 @@ def _half_mem(mem: str) -> str:
 def get_spark(app: str = "tsfeatures_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
-    # SPARK_GRAFT_MASTER overrides the master URL. The scaling harness uses
-    # local-cluster[W,C,M] (real standalone Worker + per-executor JVMs on
-    # this box): the closest single-host analog of "N executors vs 4N
-    # executors" — each executor brings its OWN JVM/GC/Arrow pool, as on a
-    # real cluster, instead of all task threads sharing the driver JVM.
+    # SPARK_GRAFT_MASTER overrides the master URL (deployment setting).
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.master(master)
@@ -40,9 +36,9 @@ def get_spark(app: str = "tsfeatures_spark", cpus: int | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 512-row Arrow batches: interleaved A/B at local[8] (tools/ab_gc.py
-        # logs) showed 512 beats 1024/256/128 on the rollup scan — smaller
-        # peak JVM allocation per batch, steadier GC
+        # 512-row Arrow batches: an interleaved A/B at local[8] showed 512
+        # beats 1024/256/128 on the rollup scan — smaller peak JVM
+        # allocation per batch, steadier GC
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # 8g, not 48g: event-log profiling showed the rollup stage spending
@@ -68,35 +64,15 @@ def get_spark(app: str = "tsfeatures_spark", cpus: int | None = None,
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
+        # Throughput collector for the local-mode driver JVM (= the executor
+        # in local mode): ParallelGC beats the G1 default on the Arrow-heavy
+        # scan (no concurrent-mark CPU tax, compacting young collections of
+        # the short-lived batch buffers). A spark.driver.extraJavaOptions
+        # entry in SPARK_GRAFT_EXTRA_CONF overrides it: it is applied later.
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
     )
-    # Throughput collector for the local-mode driver JVM (= the executor in
-    # local mode): ParallelGC beats the G1 default on the Arrow-heavy scan
-    # (no concurrent-mark CPU tax, compacting young collections of the
-    # short-lived batch buffers). SPARK_GRAFT_DRIVER_JAVA_OPTS overrides.
-    extra = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC")
-    if extra:
-        builder = builder.config("spark.driver.extraJavaOptions", extra)
-    # Arbitrary conf overrides for A/B harnesses: "k=v;k2=v2"
+    # Arbitrary conf overrides: "k=v;k2=v2"
     for kv in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";")):
         k, _, v = kv.partition("=")
         builder = builder.config(k.strip(), v.strip())
-    if master.startswith("local-cluster"):
-        # local-cluster[W,C,M]: per-executor JVM heaps instead of one big
-        # driver heap, and GC threads sized to the executor's C cores —
-        # JVM ergonomics sees the whole taskset (all arms' cores), so an
-        # un-pinned default would give every executor the WIDE arm's GC
-        # width and make the arms asymmetric per executor.
-        exec_cores = master.split(",")[1].strip() if "," in master else "2"
-        builder = (
-            builder
-            .config("spark.executor.memory", os.environ.get("SPARK_GRAFT_EXEC_MEM", "4g"))
-            # same collector as the local[N] arms (ParallelGC by default,
-            # SPARK_GRAFT_DRIVER_JAVA_OPTS override honored) so cross-master
-            # comparisons vary ONLY the JVM topology, not the GC algorithm
-            .config("spark.executor.extraJavaOptions",
-                    f"{extra} -XX:ParallelGCThreads={exec_cores} -XX:ConcGCThreads=1".strip())
-            # the driver only schedules in cluster-ish mode; don't reserve
-            # a 48g heap that the OS then can't give the executors
-            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "4g"))
-        )
     return builder.getOrCreate()
