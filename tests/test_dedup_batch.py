@@ -174,6 +174,9 @@ def test_minhash_pairs_match_per_doc_reference(spark):
     near = base[2].split()
     near[0] = "changed"
     rows.append(("near-x", " ".join(near)))
+    # NULL text is shingled as "" (the md5 collapse groups NULLs together,
+    # as exact_dedup does), so NULL and empty docs pair with each other
+    rows += [("null-0", None), ("null-1", None), ("empty-0", "")]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
 
     got = {
@@ -197,3 +200,46 @@ def test_minhash_pairs_match_per_doc_reference(spark):
     # the planted 6-identical group must appear as all 15 intra pairs at est 1.0
     grp = [(a, b) for (a, b) in got if a.startswith("grp-") and b.startswith("grp-")]
     assert len(grp) == 15 and all(got[p] == 1.0 for p in grp)
+    blank = {(a, b): v for (a, b), v in got.items()
+             if a.startswith(("null-", "empty-")) or b.startswith(("null-", "empty-"))}
+    assert blank == {("empty-0", "null-0"): 1.0, ("empty-0", "null-1"): 1.0,
+                     ("null-0", "null-1"): 1.0}
+
+
+def test_pairs_accept_any_id_type(spark):
+    """The signature tables take the id type from the input schema: an
+    int64 doc_id yields the same pairs as the same corpus with string ids.
+    Each type orders id_a < id_b by its own ordering (9 < 10 but
+    "10" < "9"), so pairs are compared unordered."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    from tsfeatures_spark.operators.dedup import minhash_lsh_pairs, simhash_near_pairs
+
+    rng = np.random.default_rng(23)
+    words = ["lorem", "ipsum", "dolor", "sit", "amet", "sed", "eiusmod"]
+    texts = [" ".join(rng.choice(words, size=int(rng.integers(5, 40)))) for _ in range(30)]
+    near = texts[2].split()
+    near[-1] = "changed"
+    texts += [texts[0]] * 3 + [texts[1], " ".join(near)]
+    int_df = spark.createDataFrame(pd.DataFrame({
+        "doc_id": np.arange(len(texts), dtype=np.int64) + 1, "text": texts}))
+    str_df = int_df.withColumn("doc_id", F.col("doc_id").cast("string"))
+
+    def unordered(out, value):
+        return {(min(str(r.id_a), str(r.id_b)), max(str(r.id_a), str(r.id_b))): r[value]
+                for r in out.collect()}
+
+    # the copies of text 0 (ids 1, 31, 32, 33) pair with each other at
+    # est_jaccard 1.0 / hamming 0
+    copies = ["1", "31", "32", "33"]
+    dup = {(a, b) for i, a in enumerate(copies) for b in copies[i + 1:]}
+    for pairs, value, identical in [
+        (lambda d: minhash_lsh_pairs(d, num_hashes=16, bands=4), "est_jaccard", 1.0),
+        (simhash_near_pairs, "hamming", 0),
+    ]:
+        int_out = pairs(int_df)
+        assert int_out.schema["id_a"].dataType == LongType()
+        got = unordered(int_out, value)
+        assert got == unordered(pairs(str_df), value)
+        assert all(got[k] == identical for k in dup)

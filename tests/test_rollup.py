@@ -162,6 +162,18 @@ def test_rollup_tiers_spark_end_to_end(spark):
     out.unpersist()
 
 
+def test_rollup_tiers_rejects_non_prefix_tiers(spark):
+    """1h blocks encode the 1m means and 1d blocks the 1h means, so only
+    prefixes of TIER_ORDER can run. Anything else must fail when the plan
+    is built, not later inside a Python worker with a KeyError."""
+    df = token_table(spark, n_docs=3, base_seed=9, partitions=1, mean_len=300)
+    for tiers in (["1h"], ["1d"], ["1m", "1d"], ["1h", "1d"], ["1h", "1m"], ["5m"], []):
+        with pytest.raises(ValueError, match=r"\[\['1m'\], \['1m', '1h'\], \['1m', '1h', '1d'\]\]"):
+            rollup_tiers(df, tiers=tiers)
+    got = rollup_tiers(df, tiers=["1m", "1h"]).select("tier").distinct().collect()
+    assert sorted(r.tier for r in got) == ["1h", "1m"]
+
+
 def test_features_wide_spark_matches_kernels(spark):
     from tsfeatures_spark.kernels.fixtures import USAccDeaths, WWWusage
     from tsfeatures_spark.operators.features import features_wide

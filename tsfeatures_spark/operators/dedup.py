@@ -16,6 +16,7 @@ corpora (boilerplate-heavy crawls).
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -180,10 +181,43 @@ def _rebatch(batches, target_rows: int, text_col: str | None = None,
         yield pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0].reset_index(drop=True)
 
 
+def _doc_chunks(hashes: np.ndarray, starts: np.ndarray, chunk_hashes: int):
+    """Doc-aligned chunks of a batch's concatenated shingle hashes, each
+    ~``chunk_hashes`` long (a single doc may exceed it), so the kernels'
+    working matrix stays cache-resident and reduceat boundaries stay
+    in-chunk. Yields (lo, hi, hs, offs): docs lo..hi-1, their hashes, and
+    each doc's start offset into ``hs``."""
+    n_docs = len(starts)
+    ends = np.append(starts[1:], len(hashes))
+    lo = 0
+    while lo < n_docs:
+        hi = lo + 1
+        while hi < n_docs and ends[hi - 1] - starts[lo] < chunk_hashes:
+            hi += 1
+        yield lo, hi, hashes[starts[lo] : ends[hi - 1]], starts[lo:hi] - starts[lo]
+        lo = hi
+
+
+def _map_shingle_kernel(df: DataFrame, text_col: str, id_col: str, shingle: int,
+                        batch_rows: int, out_col: str, out_type: str, kernel) -> DataFrame:
+    """(id_col, out_col) via one mapInPandas: each rebatched slice's
+    shingle hashes go through ``kernel(hashes, starts)``, which returns
+    the per-doc ``out_col`` values. The id column passes through with the
+    type it has in ``df`` (any type; the kernel never inspects it)."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in _rebatch(batches, batch_rows, text_col=text_col):
+            hashes, starts = _shingle_hashes_batch(pdf[text_col], shingle)
+            yield pd.DataFrame({id_col: pdf[id_col], out_col: kernel(hashes, starts)})
+
+    id_type = df.schema[id_col].dataType.simpleString()
+    return df.select(id_col, text_col).mapInPandas(
+        run, schema=f"{id_col} {id_type}, {out_col} {out_type}")
+
+
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        num_hashes: int = 64, shingle: int = 5, seed: int = 42,
-                       batch_rows: int = 4096, chunk_hashes: int = 16384,
-                       id_type: str = "string") -> DataFrame:
+                       batch_rows: int = 4096, chunk_hashes: int = 16384) -> DataFrame:
     """(doc_id, sig: array<long>) — k-permutation minhash via universal
     hashing ((a*x+b) mod p), vectorized NumPy inside mapInPandas.
 
@@ -195,34 +229,55 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     order-of-magnitude win over a memory-bandwidth-bound monolithic
     matrix, measured in tests/test_dedup.py's micro-bench).
 
-    ``id_type`` lets the id column be a non-string passthrough (e.g.
-    ``array<string>`` of member doc ids when the caller pre-groups
-    identical texts) — the kernel never inspects it."""
+    The id column keeps its input type, e.g. ``array<string>`` member ids
+    when the caller pre-groups identical texts."""
     rng = np.random.default_rng(seed)
     A = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
     B = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.int64).astype(np.uint64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in _rebatch(batches, batch_rows, text_col=text_col):
-            hashes, starts = _shingle_hashes_batch(pdf[text_col], shingle)
-            n_docs = len(starts)
-            mins = np.empty((num_hashes, n_docs), dtype=np.uint64)
-            # chunk doc-aligned so reduceat boundaries stay in-chunk
-            ends = np.append(starts[1:], len(hashes))
-            lo = 0
-            while lo < n_docs:
-                hi = lo + 1
-                while hi < n_docs and ends[hi - 1] - starts[lo] < chunk_hashes:
-                    hi += 1
-                hs = hashes[starts[lo] : ends[hi - 1]]
-                H = (A[:, None] * hs[None, :] + B[:, None]) % np.uint64(_MERSENNE)
-                mins[:, lo:hi] = np.minimum.reduceat(H, starts[lo:hi] - starts[lo], axis=1)
-                lo = hi
-            sig64 = mins.astype(np.int64)
-            yield pd.DataFrame({id_col: pdf[id_col], "sig": [sig64[:, i] for i in range(n_docs)]})
+    def kernel(hashes: np.ndarray, starts: np.ndarray) -> list:
+        mins = np.empty((num_hashes, len(starts)), dtype=np.uint64)
+        for lo, hi, hs, offs in _doc_chunks(hashes, starts, chunk_hashes):
+            H = (A[:, None] * hs[None, :] + B[:, None]) % np.uint64(_MERSENNE)
+            mins[:, lo:hi] = np.minimum.reduceat(H, offs, axis=1)
+        sig64 = mins.astype(np.int64)
+        return [sig64[:, i] for i in range(len(starts))]
 
-    return df.select(id_col, text_col).mapInPandas(
-        run, schema=f"{id_col} {id_type}, sig array<long>")
+    return _map_shingle_kernel(df, text_col, id_col, shingle, batch_rows,
+                               "sig", "array<long>", kernel)
+
+
+def _per_doc_signatures(df: DataFrame, text_col: str, id_col: str, signatures) -> DataFrame:
+    """Per-doc signature table with the kernel run once per UNIQUE text
+    (r06): identical texts get identical signatures by construction, so
+    ``signatures(reps, text_col, "_ids")`` computes over one md5-group
+    representative and the per-doc rows come from exploding the group's
+    member ids — no rejoin at all. Signature values are bit-identical per
+    doc; on any corpus with exact re-posts (boilerplate crawls; the
+    doubled oracle corpus) this halves the kernel cost. NULL texts form
+    one group whose kernel text is "" (as ``exact_dedup`` groups them).
+
+    The member ids ride the groupBy as collect_list (the shuffle already
+    carries the text, the id list is tiny next to it). F.first(text) is
+    deterministic because every row of a group carries the identical text
+    (same md5 preimage); list order is irrelevant (explode emits all).
+
+    EAGER localCheckpoint: the pair operators consume the table several
+    times (band self-join sides, signature rejoins) and Spark submits
+    those leaf stages CONCURRENTLY — against a lazy plan each raced to
+    recompute the whole signature scan (observed ~4x the kernel cost).
+    One job instead of cache+count's two, and the blocks free when the
+    plan is GC'd. Trade-off: checkpoint blocks are not recomputable on
+    executor loss — the query fails and retries whole."""
+    reps = (
+        df.select(F.col(id_col), F.col(text_col))
+        .withColumn("_fp", F.md5(F.col(text_col)))
+        .groupBy("_fp")
+        .agg(F.first(text_col).alias(text_col), F.collect_list(id_col).alias("_ids"))
+    )
+    rep_sig = signatures(reps, text_col, "_ids")
+    sig_cols = [c for c in rep_sig.columns if c != "_ids"]
+    return rep_sig.select(F.explode("_ids").alias(id_col), *sig_cols).localCheckpoint()
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -231,52 +286,20 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     """Candidate near-dup pairs via banded LSH + estimated jaccard
     (fraction of agreeing minhashes). Returns (id_a, id_b, est_jaccard).
 
-    r06 restructure — the signature KERNEL runs once per unique text:
-    identical texts get identical signatures by construction, so the
-    shingle/minhash mapInPandas computes over one md5-group representative
-    (member ids riding along as a collect_list) and the per-doc signature
-    table is re-derived by exploding the id list — no rejoin at all.
-    Signature values are bit-identical per doc, and everything
-    downstream (banding, candidate join, est) is unchanged — so the
-    emitted pairs are value-identical to the per-doc formulation (pinned
-    by tests/test_dedup_batch.py::test_minhash_pairs_match_per_doc_reference).
-    On any corpus with exact re-posts (boilerplate crawls; the doubled
-    oracle corpus) this halves the kernel cost. Banding deliberately stays
-    PER DOC: a rep-level band join with post-hoc pair expansion was
-    measured 4x SLOWER on the gate query because caller predicates on the
-    pair ids (the planted-relation filter) can push into a per-doc band
-    join as a join condition but cannot cross the expansion joins —
-    enumerating the corpus's full 24M-pair natural candidate space that
-    the pushed filter otherwise prunes at the probe."""
+    Signatures come from ``_per_doc_signatures`` (kernel once per unique
+    text), so the emitted pairs are value-identical to the per-doc
+    formulation (pinned by
+    tests/test_dedup_batch.py::test_minhash_pairs_match_per_doc_reference).
+    Banding deliberately stays PER DOC: a rep-level band join with
+    post-hoc pair expansion was measured 4x SLOWER on the gate query
+    because caller predicates on the pair ids (the planted-relation
+    filter) can push into a per-doc band join as a join condition but
+    cannot cross the expansion joins — enumerating the corpus's full
+    24M-pair natural candidate space that the pushed filter otherwise
+    prunes at the probe."""
     rows = num_hashes // bands
-    d = df.select(F.col(id_col), F.col(text_col))
-    fp = d.withColumn("_fp", F.md5(F.col(text_col)))
-    # one representative row per distinct text; the group's MEMBER IDS ride
-    # along as collect_list so per-doc signatures come from a narrow
-    # explode after the kernel instead of a (_fp -> sig) rejoin — one join
-    # + one exchange fewer than the first r06 cut (the groupBy shuffle
-    # carries the id list, which is tiny next to the text it already
-    # carries). F.first(text) is deterministic here because every row in
-    # the group carries the identical text (same md5 preimage); list order
-    # is irrelevant (explode emits all members).
-    reps = fp.groupBy("_fp").agg(F.first(text_col).alias(text_col),
-                                 F.collect_list(id_col).alias("_ids"))
-    rep_sig = minhash_signatures(reps, text_col, "_ids", num_hashes, shingle, seed,
-                                 id_type="array<string>")
-    # EAGER materialization of the per-doc signature table (r06): it has
-    # four consumers (band join l/r + the two signature rejoins) whose
-    # leaf stages Spark submits CONCURRENTLY — against a lazy plan each
-    # raced to recompute the whole signature scan itself (observed: four
-    # simultaneous full evaluations, ~4x the kernel cost, thrashing every
-    # core). localCheckpoint rather than cache+count: one job instead of
-    # two, and the blocks free automatically when the plan is GC'd
-    # (repeated bench trials don't accumulate cache entries). Trade-off:
-    # checkpoint blocks are not recomputable on executor loss — the query
-    # fails and retries whole, acceptable for a bounded intermediate.
-    sig = (
-        rep_sig.select(F.explode("_ids").alias(id_col), "sig")
-        .localCheckpoint()
-    )
+    sig = _per_doc_signatures(df, text_col, id_col, partial(
+        minhash_signatures, num_hashes=num_hashes, shingle=shingle, seed=seed))
     # band the ids ONLY: the self-join + distinct then shuffle narrow
     # (id, band) rows, not 64-long signature arrays — the wide sig columns
     # rejoin AFTER dedup, touching each surviving pair once
@@ -320,56 +343,34 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
 
 def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        shingle: int = 4, batch_rows: int = 4096,
-                       chunk_hashes: int = 16384, id_type: str = "string") -> DataFrame:
+                       chunk_hashes: int = 16384) -> DataFrame:
     """64-bit SimHash over character shingles (sign of per-bit vote).
     Batch-vectorized like ``minhash_signatures``: per-bit votes for every
     doc in the batch come from one ``np.add.reduceat`` over the
-    concatenated hash buffer. ``id_type`` as in ``minhash_signatures``."""
+    concatenated hash buffer. The id column keeps its input type."""
+    bit_idx = np.arange(64, dtype=np.uint64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bit_idx = np.arange(64, dtype=np.uint64)
-        for pdf in _rebatch(batches, batch_rows, text_col=text_col):
-            hashes, starts = _shingle_hashes_batch(pdf[text_col], shingle)
-            n_docs = len(starts)
-            votes = np.empty((n_docs, 64), dtype=np.int64)
-            ends = np.append(starts[1:], len(hashes))
-            lo = 0
-            while lo < n_docs:
-                hi = lo + 1
-                while hi < n_docs and ends[hi - 1] - starts[lo] < chunk_hashes:
-                    hi += 1
-                # spread 61-bit hashes to 64 bits deterministically
-                h64 = hashes[starts[lo] : ends[hi - 1]] * np.uint64(0x9E3779B97F4A7C15)
-                bits = ((h64[:, None] >> bit_idx[None, :]) & np.uint64(1)).astype(np.int64)
-                votes[lo:hi] = np.add.reduceat(2 * bits - 1, starts[lo:hi] - starts[lo], axis=0)
-                lo = hi
-            sig = ((votes > 0).astype(np.uint64) << bit_idx[None, :]).sum(
-                axis=1, dtype=np.uint64).astype(np.int64)
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": sig})
+    def kernel(hashes: np.ndarray, starts: np.ndarray) -> np.ndarray:
+        votes = np.empty((len(starts), 64), dtype=np.int64)
+        for lo, hi, hs, offs in _doc_chunks(hashes, starts, chunk_hashes):
+            # spread 61-bit hashes to 64 bits deterministically
+            h64 = hs * np.uint64(0x9E3779B97F4A7C15)
+            bits = ((h64[:, None] >> bit_idx[None, :]) & np.uint64(1)).astype(np.int64)
+            votes[lo:hi] = np.add.reduceat(2 * bits - 1, offs, axis=0)
+        return ((votes > 0).astype(np.uint64) << bit_idx[None, :]).sum(
+            axis=1, dtype=np.uint64).astype(np.int64)
 
-    return df.select(id_col, text_col).mapInPandas(
-        run, schema=f"{id_col} {id_type}, simhash long")
+    return _map_shingle_kernel(df, text_col, id_col, shingle, batch_rows,
+                               "simhash", "long", kernel)
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming via 4x16-bit
     banding (any identical band => candidate; guarantees recall for
-    distance <= 3)."""
-    # kernel once per unique text + explode of member ids (r06, same
-    # recipe as minhash_lsh_pairs: identical texts produce identical
-    # simhashes by construction, so per-doc values are unchanged while a
-    # boilerplate-heavy corpus pays the shingle/vote kernel once per
-    # distinct text); eager localCheckpoint is the same stampede guard
-    # (multiple consumers whose leaf stages are submitted concurrently
-    # would each recompute the signature scan), blocks free when the plan
-    # is GC'd
-    fp = df.withColumn("_fp", F.md5(F.col(text_col)))
-    reps = fp.groupBy("_fp").agg(F.first(text_col).alias(text_col),
-                                 F.collect_list(id_col).alias("_ids"))
-    rep_sig = simhash_signatures(reps, text_col, "_ids", id_type="array<string>")
-    sig = (rep_sig.select(F.explode("_ids").alias(id_col), "simhash")
-           .localCheckpoint())
+    distance <= 3). Signatures from ``_per_doc_signatures``, like
+    ``minhash_lsh_pairs``."""
+    sig = _per_doc_signatures(df, text_col, id_col, simhash_signatures)
     banded = sig.select(
         id_col, "simhash",
         F.posexplode(F.array(*[
@@ -388,6 +389,19 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc
     return pairs.select("id_a", "id_b", ham.alias("hamming")).where(F.col("hamming") <= max_hamming)
 
 
+def _word_ngrams(text_col: str, n: int):
+    """array<string> Column of the distinct word n-grams of ``text_col``
+    (lower-cased, whitespace-split; a text shorter than n words yields
+    itself as its one gram)."""
+    words = F.split(F.lower(F.col(text_col)), "\\s+")
+    return F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
+            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
+        )
+    )
+
+
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                         n: int = 3, block_cols: list[str] | None = None,
                         min_jaccard: float = 0.0, max_df: int | None = 10_000) -> DataFrame:
@@ -402,16 +416,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     and the per-doc sizes), giving an exact jaccard over the informative
     grams; when no gram exceeds the cap the result is the plain exact
     jaccard. Pass max_df=None for the uncapped exact semantics."""
-    words = F.split(F.lower(F.col(text_col)), "\\s+")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        )
-    )
     base_cols = [id_col] + (block_cols or [])
     join_keys = ["gram"] + (block_cols or [])
-    g = df.select(*base_cols, grams.alias("grams"))
+    g = df.select(*base_cols, _word_ngrams(text_col, n).alias("grams"))
     ex = g.select(*base_cols, F.explode("grams").alias("gram"))
     if max_df is not None:
         # document frequency per (gram, block); partial-aggregated groupBy,
@@ -446,14 +453,7 @@ def near_dup_pipeline(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     """
     cands = minhash_lsh_pairs(df, text_col, id_col, num_hashes, bands, shingle, seed)
     cands = cands.where(F.col("est_jaccard") >= min_est)
-    words = F.split(F.lower(F.col(text_col)), "\\s+")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(words) - ngram, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, ngram)),
-        )
-    )
-    g = df.select(F.col(id_col), grams.alias("grams"))
+    g = df.select(F.col(id_col), _word_ngrams(text_col, ngram).alias("grams"))
     pairs = (
         cands.join(g.withColumnRenamed(id_col, "id_a").withColumnRenamed("grams", "ga"), "id_a")
         .join(g.withColumnRenamed(id_col, "id_b").withColumnRenamed("grams", "gb"), "id_b")

@@ -4,7 +4,8 @@ The engine's throughput core. Each input row is one whole series
 (doc_id, tokens:array<int32>) — self-contained — so the entire cascade is a
 single ``mapInPandas`` scan with ZERO shuffle: no Exchange appears in the
 physical plan (the reference pays one process-pool task per series,
-tsfeatures.py:970-971; we pay one Arrow batch per ~64 docs).
+tsfeatures.py:970-971; we pay one Arrow batch per the session's
+``maxRecordsPerBatch``, 512 rows).
 
 Per (doc, tier-window) we emit:
 - algebraic state: n, total_sum, vmin, vmax, mean, m2 (Chan-mergeable)
@@ -35,10 +36,8 @@ from typing import Iterator, List
 import numpy as np
 import pandas as pd
 
-from ..compression import xor_encode  # noqa: F401 (re-export for tests)
 from ..compression.gorilla import xor_encode_windows
 from ..compression.delta import dod_encode_windows
-from ..kernels import compute_features
 from ..kernels import stats as _st
 
 TIERS = {"1m": 60, "1h": 3600, "1d": 86400}
@@ -56,9 +55,6 @@ ROLLUP_SCHEMA = (
     "flat_spots double, entropy double, stability double, lumpiness double, "
     "block binary, block_digest string"
 )
-
-_KERNEL_FEATURES = ["statistics", "acf_features", "crossing_points",
-                    "flat_spots", "entropy", "stability", "lumpiness"]
 
 
 def _xlogx2(p: np.ndarray) -> np.ndarray:
@@ -328,37 +324,22 @@ def rollup_doc(doc_id: str, source: str, tokens: np.ndarray,
     return results
 
 
-def rollup_tiers(df, tiers: List[str] = TIER_ORDER, batch_docs: int = 64,
-                 split_giant_tok: int | None = None, arrow: bool = False):
+def rollup_tiers(df, tiers: List[str] = TIER_ORDER, split_giant_tok: int | None = None):
     """raw token table -> all-tier rollup DataFrame in ONE mapInPandas
     scan (no shuffle; AQE/Catalyst see Scan -> MapInPandas).
 
-    A mapInArrow twin (zero-copy token slicing, RecordBatch emission) was
-    A/B'd and DELETED (round 5): interleaved runs read pandas at or ahead
-    of arrow at BOTH local[8]/20k docs (medians 21.1s vs 20.3s, within
-    noise) and local[32]/15k docs (min 4.00s vs 4.10s, median 4.01s vs
-    4.97s — BENCH/ab_arrow.json), because rollup_doc compute dominates
-    transfer at every width; ``arrow`` is accepted for API compatibility
-    and ignored. git history (round 4) has the variant if transfer ever
-    becomes the bottleneck.
+    ``tiers`` must be a prefix of ``TIER_ORDER``: 1h blocks encode the 1m
+    means and 1d blocks the 1h means, so a tier needs every tier below it.
 
     ``split_giant_tok``: docs longer than this are pre-split into
     day-aligned segments (operators/skew.py) so a single pathological doc
     never pins one task — the output rows are identical to the unsplit
     computation (window-aligned segmentation; pinned by tests)."""
-
-    out_cols = [f.split(" ")[0] for f in ROLLUP_SCHEMA.split(", ")]
-
-    if arrow:
-        # runtime signal to match the docstring (ADVICE r05): the
-        # mapInArrow twin was deleted after the round-5 A/B; arrow=True
-        # silently took the pandas path since then
-        import warnings
-
-        warnings.warn(
-            "rollup_tiers(arrow=True) is ignored: the mapInArrow variant was "
-            "removed (round-5 A/B, BENCH/ab_arrow.json); running mapInPandas.",
-            DeprecationWarning, stacklevel=2)
+    tiers = list(tiers)
+    allowed = [TIER_ORDER[:k] for k in range(1, len(TIER_ORDER) + 1)]
+    if tiers not in allowed:
+        raise ValueError(f"rollup_tiers: tiers={tiers!r} unsupported; "
+                         f"each tier is built from the one below it, so use one of {allowed}")
 
     if split_giant_tok is not None:
         from .skew import split_giant_docs
@@ -382,11 +363,22 @@ def rollup_tiers(df, tiers: List[str] = TIER_ORDER, batch_docs: int = 64,
         n_part = df.sparkSession.sparkContext.defaultParallelism
         seg = split_giant_docs(big, max_tok=split_giant_tok).repartition(
             n_part, "doc_id", "seg_id")
-        out_small = rollup_tiers(small, tiers, batch_docs, None, arrow)
-        return out_small.unionByName(_rollup_segments(seg, tiers, out_cols))
+        return rollup_tiers(small, tiers).unionByName(
+            _rollup_scan(seg.select("doc_id", "seg_start", "tokens", "source"), tiers))
+
+    return _rollup_scan(df.select(*[c for c in ("doc_id", "tokens", "source") if c in df.columns]),
+                        tiers)
+
+
+def _rollup_scan(df, tiers: List[str]):
+    """One mapInPandas cascade over (doc_id, tokens[, source][, seg_start])
+    rows. ``seg_start`` (pre-split giant-doc segments) offsets window ids
+    so the union of segment rows equals the unsplit rollup."""
+    out_cols = [f.split(" ")[0] for f in ROLLUP_SCHEMA.split(", ")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import warnings
+        from itertools import chain
 
         warnings.filterwarnings("ignore")
         np.seterr(all="ignore")
@@ -394,57 +386,15 @@ def rollup_tiers(df, tiers: List[str] = TIER_ORDER, batch_docs: int = 64,
         n_acc = 0
 
         def flush():
-            from itertools import chain
-
-            return pd.DataFrame({c: np.concatenate(acc[c]) if c not in ("block",)
+            return pd.DataFrame({c: np.concatenate(acc[c]) if c != "block"
                                  else list(chain.from_iterable(acc[c])) for c in out_cols})
 
         for pdf in batches:
-            doc_ids = pdf["doc_id"].to_numpy()
-            sources = pdf["source"].to_numpy() if "source" in pdf else np.full(len(pdf), "")
-            tok_col = pdf["tokens"].to_numpy()
-            for doc_id, source, toks in zip(doc_ids, sources, tok_col):
-                per_tier = rollup_doc(doc_id, source, np.asarray(toks), tiers)
-                for tier in tiers:
-                    cols = per_tier[tier]
-                    for c in out_cols:
-                        acc[c].append(cols[c])
-                    n_acc += len(cols["window_id"])
-                if n_acc >= 4096:
-                    yield flush()
-                    acc = {c: [] for c in out_cols}
-                    n_acc = 0
-        if n_acc:
-            yield flush()
-
-    cols = df.columns
-    needed = [c for c in ("doc_id", "tokens", "source") if c in cols]
-    return df.select(*needed).mapInPandas(run, schema=ROLLUP_SCHEMA)
-
-
-def _rollup_segments(seg_df, tiers: List[str], out_cols: List[str]):
-    """Cascade over pre-split (doc_id, seg_id, seg_start, tokens, source)
-    segments; window ids carry the segment's tick offset so the union of
-    segment rows equals the unsplit rollup."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import warnings
-
-        warnings.filterwarnings("ignore")
-        np.seterr(all="ignore")
-        acc: dict[str, list] = {c: [] for c in out_cols}
-        n_acc = 0
-
-        def flush():
-            from itertools import chain
-
-            return pd.DataFrame({c: np.concatenate(acc[c]) if c not in ("block",)
-                                 else list(chain.from_iterable(acc[c])) for c in out_cols})
-
-        for pdf in batches:
+            n = len(pdf)
+            sources = pdf["source"].to_numpy() if "source" in pdf else np.full(n, "")
+            starts = pdf["seg_start"].to_numpy() if "seg_start" in pdf else np.zeros(n, np.int64)
             for doc_id, source, toks, start in zip(
-                pdf["doc_id"].to_numpy(), pdf["source"].to_numpy(),
-                pdf["tokens"].to_numpy(), pdf["seg_start"].to_numpy(),
+                pdf["doc_id"].to_numpy(), sources, pdf["tokens"].to_numpy(), starts,
             ):
                 per_tier = rollup_doc(doc_id, source, np.asarray(toks), tiers,
                                       start_tick=int(start))
@@ -460,8 +410,7 @@ def _rollup_segments(seg_df, tiers: List[str], out_cols: List[str]):
         if n_acc:
             yield flush()
 
-    sel = seg_df.select("doc_id", "seg_start", "tokens", "source")
-    return sel.mapInPandas(run, schema=ROLLUP_SCHEMA)
+    return df.mapInPandas(run, schema=ROLLUP_SCHEMA)
 
 
 def merge_algebraic(tier_df, from_tier: str, to_tier: str):
